@@ -11,14 +11,15 @@ Spark design: everything is a declarative DataFrame transform —
 - dedup is a hash aggregate ``max_by(value, version_ts)`` with map-side
   partial aggregation (strictly better than the reference's per-row
   NavigableMap walk);
-- ordering for the HFile sink is expressed ONCE as
-  ``repartitionByRange(bucket, key_hex) + sortWithinPartitions`` giving
-  globally non-overlapping sorted output per bucket (SURVEY.md §4.2 — a
-  correctness upgrade over the reference's partition-local sort).
+- ordering for the HFile sink is expressed ONCE, by the writers, in
+  ``sources/hfile.kv_layout``: ``repartitionByRange(region, key,
+  qualifier) + sortWithinPartitions`` giving globally non-overlapping
+  sorted output per region (SURVEY.md §4.2 — a correctness upgrade over
+  the reference's partition-local sort).
 
 Scale notes (100 TB): the only shuffles are the dedup aggregate (keyed on
 (key, qualifier) — high cardinality, well-spread because the salt prefix is
-in the key) and the final range partitioning (512 buckets ≈ reference's
+in the key) and the writer's range partitioning (512 buckets ≈ reference's
 region spread, HBaseProperties.java:16). Salting exists precisely to spread
 monotonically-increasing time keys; we preserve it unchanged.
 """
@@ -222,28 +223,17 @@ def bulkload_kv(
     cells: DataFrame,
     bucket_count: int = DEFAULT_BUCKET_COUNT,
     family: bytes = DEFAULT_FAMILY,
-    num_partitions: int | None = None,
     tie_col: str | None = None,
 ) -> DataFrame:
-    """Full flagship pipeline: salt → dedup-to-latest → (key, family,
-    qualifier, value) sorted per bucket range — the stream H1-H3 write.
+    """Full flagship pipeline: salt → dedup-to-latest → the (bucket, key,
+    key_hex, family, qualifier, qualifier_hex, value) stream H1-H3 write.
 
-    Upgrade over the reference (SURVEY.md §4.2): ``repartitionByRange`` on
-    (bucket, key, qualifier) makes files globally non-overlapping and
-    totally ordered across partitions, not just within one.
-
-    Ordering runs on the RAW BINARY keys (round 8, VERDICT r07 item 2):
-    Spark compares BinaryType unsigned-lexicographically — exactly
-    HBase's Bytes.compareTo order — and uppercase-hex encoding is
-    order-isomorphic to it, so sorting on (key, qualifier) yields the
-    byte-identical stream the old (key_hex, qualifier_hex) sort did
-    while (a) halving the sort-key bytes the range exchange carries and
-    compares, and (b) keeping hex codec work OFF the dedup shuffle
-    entirely: the hex columns are display/oracle/manifest projections
+    The stream is unordered: the writers (``sources.hfile.write_hfiles``,
+    ``sources.hfilev3.write_hfilev3_files``) own the key layout and apply
+    ``hfile.kv_layout`` themselves, because only they know the region
+    mapping. The hex columns are display/oracle/manifest projections,
     computed once per SURVIVING row after the dedup instead of once per
-    input row before it (and no longer ride the exchange as a redundant
-    group key). test_composed_tsdb pins hex-order == binary-order on
-    adversarial high-bit keys.
+    input row before it, so they never ride the dedup shuffle.
 
     ``tie_col`` is forwarded to :func:`latest_version_dedup` so callers
     with same-version collisions get a deterministic winner without a
@@ -255,7 +245,7 @@ def bulkload_kv(
         key_cols=("bucket", "salted_key", "qualifier"),
         tie_col=tie_col,
     )
-    kv = deduped.select(
+    return deduped.select(
         F.col("bucket"),
         F.col("salted_key").alias("key"),
         key_hex(F.col("salted_key")).alias("key_hex"),
@@ -263,10 +253,6 @@ def bulkload_kv(
         F.col("qualifier"),
         key_hex(F.col("qualifier")).alias("qualifier_hex"),
         F.col("value"),
-    )
-    n = num_partitions or bucket_count // 8
-    return kv.repartitionByRange(n, "bucket", "key", "qualifier").sortWithinPartitions(
-        "bucket", "key", "qualifier"
     )
 
 

@@ -459,7 +459,7 @@ def q56_bulkload_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle where a separate pre-collapse groupBy would cost a second;
     # bit-identical to collapsing first and max_by'ing after.
     c1 = cells.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
-    kv = tsdb.bulkload_kv(c1, num_partitions=16, tie_col="dvalue")
+    kv = tsdb.bulkload_kv(c1, tie_col="dvalue")
     schema = (
         "src string, region int, n_cells long, n_keys long, "
         "min_key_hex string, max_key_hex string, sum_value_cents long"
@@ -478,10 +478,7 @@ def q56_bulkload_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = tempfile.mkdtemp(prefix="q56hfiles")
     try:
-        hfile.write_hfiles(
-            kv, d, rollup=True, num_partitions=16, manifest=False,
-            presorted=True,  # kv IS bulkload_kv output (r09, guide §2.4)
-        )
+        hfile.write_hfiles(kv, d, rollup=True, num_partitions=16, manifest=False)
         # full-corpus summary: native parquet readback (the sink IS parquet
         # per region; at bench scale a full Arrow transfer through the
         # Python source would dominate the query). The SAME aggregation

@@ -41,7 +41,7 @@ def q221_hfilev3_snappy(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's table DDL."""
     cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir, spread=True))
     c1 = cells.withColumn("value", tsdb.encode_double_be(F.col("dvalue")))
-    kv = tsdb.bulkload_kv(c1, num_partitions=16, tie_col="dvalue")
+    kv = tsdb.bulkload_kv(c1, tie_col="dvalue")
 
     from hbase_bulkload_service_spark.registry_wave4 import _scratch
 
@@ -53,7 +53,7 @@ def q221_hfilev3_snappy(spark: SparkSession, sf_dir: str) -> DataFrame:
         kv, d, rollup=True, num_partitions=16,
         compression="SNAPPY", encoding="DIFF", bloom=True,
     )
-    hfile.validate_hfl2_layout(d, rollup=True, deep=False)
+    hfile.validate_manifest_layout(d, rollup=True)
     back = hfilev3.read_hfilev3_dir(spark, d)
     from hbase_bulkload_service_spark.functions.codec import decode_double_be
 

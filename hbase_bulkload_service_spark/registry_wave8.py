@@ -1,7 +1,7 @@
 """Registry wave 8 (q115+) — round-4 additions: oracle-gated sketch
 accuracy (converts the last non-BPE rows-only gate into a hash-exact
-row), the HFL2 binary-container bulkload round-trip (block index + ROW
-bloom + DIFF encoding), exact heavy hitters via the two-pass Misra-Gries
+row), the shared container-agnostic bulkload oracle (its q116 gate is
+retired, see below), exact heavy hitters via the two-pass Misra-Gries
 shape, oracle-unrolled ITERATIVE algorithms (q118 integer Lloyd k-means,
 q121 fixed-round hash-to-min connected components — completing the
 family started by q114 PageRank), bigram-LM document quality scoring
@@ -63,14 +63,12 @@ def q115_sketch_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# q116 — bulkload e2e through the HFL2 BINARY container (block index +
-# ROW bloom + DIFF encoding — the HFile v3 features the reference's table
-# config enables: HBaseManager.java:379-385, HFileOutputUtil.java:20-26)
+# The bulkload container oracle (q116, retired below; q167-q169, q221)
 # ===========================================================================
 
-# Shared by q116 (HFL2 stand-in container) and q167 (real HFile v3
-# container, registry_wave17): the oracle recomputes the bulkload
-# pipeline from source data and is container-agnostic by construction.
+# Shared by the real HFile v3 container gates (registry_wave17,
+# registry_wave30): the oracle recomputes the bulkload pipeline from
+# source data and is container-agnostic by construction.
 HFL_CONTAINER_ORACLE = f"""
     WITH {TSDB_CELLS_CTE},
     c1 AS (
@@ -108,11 +106,10 @@ HFL_CONTAINER_ORACLE = f"""
 # q170 (byte-level bloom+index seek), q221 (DIFF+SNAPPY+compound-bloom
 # DDL codec). Every container invariant q116 enforced in-task (magic,
 # index<->block agreement, DIFF decode, global sort, bloom membership,
-# per-region aggregate parity with the manifest) is pinned by
-# tests/test_bulkload_hfile.py::{test_hfl2_unit_roundtrip,
-# test_hfl2_distributed_write_read} over the same write/read code path;
-# retiring the registry entry drops ~20 s from every local bench run
-# with zero coverage loss (COVERAGE.md H1 row updated).
+# per-region aggregate parity with the manifest) has its v3 counterpart
+# in read_hfilev3_dir's reading tasks and tests/test_hfilev3.py. The
+# stand-in container itself was deleted later; its manifest-level
+# validator survives as sources/hfile.validate_manifest_layout.
 
 
 # ===========================================================================

@@ -233,10 +233,11 @@ def streaming_bulkload(
     """J1 × H1-H3 — the reference's production loop (bulkload jobs enqueued
     over time, each producing an adoption unit: HFile set + manifest,
     HBaseController.java:49-124) as a Structured Streaming foreachBatch:
-    every micro-batch runs the FULL flagship pipeline (salt → dedup →
-    range-sorted per-region files, operators/tsdb.bulkload_kv) into its
-    own ``batch=<id>/`` staging dir — one adoption unit per batch, exactly
-    the queue's one-job-at-a-time contract (micro-batches are sequential).
+    every micro-batch runs the FULL flagship pipeline (salt → dedup in
+    operators/tsdb.bulkload_kv → range-sorted per-region files in
+    sources/hfile.write_hfiles) into its own ``batch=<id>/`` staging dir
+    — one adoption unit per batch, exactly the queue's one-job-at-a-time
+    contract (micro-batches are sequential).
 
     Cross-batch versions are NOT merged here: like the reference, each
     job's HFile set is self-consistent and HBase resolves versions at read
@@ -253,15 +254,11 @@ def streaming_bulkload(
     def write(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):
             return  # empty trigger: no adoption unit
-        kv = _tsdb.bulkload_kv(
-            batch_df, bucket_count=bucket_count, num_partitions=num_partitions
-        )
         _hfile.write_hfiles(
-            kv,
+            _tsdb.bulkload_kv(batch_df, bucket_count=bucket_count),
             os.path.join(base_path, f"batch={int(batch_id)}"),
             rollup=rollup,
             num_partitions=num_partitions,
-            presorted=True,  # kv IS bulkload_kv output (r09, guide §2.4)
         )
 
     return write

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import json
 import os
-import struct
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,7 +17,7 @@ from hbase_bulkload_service_spark.sources.tables import load_events
 @pytest.fixture(scope="module")
 def kv(spark, sf_dir):
     cells = tsdb.derive_tsdb_cells(load_events(spark, sf_dir))
-    return tsdb.bulkload_kv(cells, num_partitions=8).cache()
+    return tsdb.bulkload_kv(cells).cache()
 
 
 def test_kv_is_deduped(kv):
@@ -51,170 +50,71 @@ def test_rollup_region_step(spark, kv, tmp_path):
     bad = df.filter(F.expr("bucket div 8") != F.col("region")).count()
     assert bad == 0
     hfile.validate_layout(spark, path, rollup=True)
+    # the same files read as the raw layout hold rows of 8 buckets per
+    # region dir: the one-pass validation must count them as misplaced
+    with pytest.raises(AssertionError, match="landed in the wrong region"):
+        hfile.validate_layout(spark, path, rollup=False)
 
 
-def test_presorted_write_equals_default_write(spark, kv, tmp_path):
-    """r09 (guide §2.4): ``presorted=True`` on bulkload_kv output must
-    produce the same rows AND the same layout invariants as the default
-    writer path, while skipping the second range exchange (the key
-    embeds the bucket as its BE prefix, so (bucket, key, qualifier)
-    order == (region, key, qualifier) order)."""
-    p_default = str(tmp_path / "hf_default")
-    p_presorted = str(tmp_path / "hf_presorted")
-    hfile.write_hfiles(kv, p_default, rollup=True, num_partitions=8)
-    hfile.write_hfiles(
-        kv, p_presorted, rollup=True, num_partitions=8, presorted=True
+def _assert_files_key_sorted(root: str) -> int:
+    """Every parquet file under ``root`` holds its rows in (key,
+    qualifier) order — read back file by file with pyarrow, so no Spark
+    re-ordering can hide a writer that lost its sort."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = sorted(glob.glob(os.path.join(root, "**", "*.parquet"), recursive=True))
+    for fname in files:
+        t = pq.read_table(fname, columns=["key", "qualifier"])
+        rows = list(zip(t.column("key").to_pylist(), t.column("qualifier").to_pylist()))
+        assert rows == sorted(rows), f"{fname}: rows not sorted by (key, qualifier)"
+    return len(files)
+
+
+def test_service_bulkload_files_are_key_sorted(spark, sf_dir, tmp_path):
+    """BulkloadService's parquet files are sorted inside themselves (the
+    parquet writer's own Sort [region] must not displace the key sort)."""
+    from hbase_bulkload_service_spark.api import BulkloadRequest, BulkloadService
+
+    svc = BulkloadService(
+        spark,
+        lambda _table: tsdb.derive_tsdb_cells(load_events(spark, sf_dir)),
+        str(tmp_path),
     )
-    a = spark.read.parquet(p_default)
-    b = spark.read.parquet(p_presorted)
-    cols = sorted(a.columns)
-    assert sorted(b.columns) == cols
-    ra = sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
-                      for v in r) for r in a.select(*cols).collect())
-    rb = sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
-                      for v in r) for r in b.select(*cols).collect())
-    assert ra == rb
-    # the presorted layout must satisfy every writer invariant the
-    # default path does (sorted within files, regions non-overlapping,
-    # region == bucket prefix, file cap)
-    hfile.validate_layout(spark, p_presorted, rollup=True)
+    start, end = 1704067200000, 1706745600000
+    for rollup in (False, True):
+        svc.bulkload(BulkloadRequest("tsdb", f"t{int(rollup)}", start, end, rollup=rollup))
+    svc.run_pending()
+    assert not svc.queue.failures
+    assert _assert_files_key_sorted(str(tmp_path)) > 1
 
 
-def test_hfl1_binary_container(kv, tmp_path):
-    path = str(tmp_path / "hfl1")
-    manifest = hfile.write_hfl1_files(kv, path)
-    assert manifest
-    total = 0
-    for entry in manifest:
-        fpath = os.path.join(path, entry["file"])
-        with open(fpath, "rb") as f:
-            data = f.read()
-        assert data[:4] == hfile.HFL1_MAGIC
-        # layout: MAGIC | records | trailer_len(4B) | trailer
-        pos, last_key, n = 4, None, 0
-        for _ in range(entry["rows"]):
-            klen, flen, qlen, vlen = struct.unpack(">IIII", data[pos : pos + 16])
-            pos += 16
-            key = data[pos : pos + klen]
-            pos += klen + flen + qlen + vlen
-            if last_key is not None:
-                assert key >= last_key
-            last_key = key
-            n += 1
-        # after all records comes the trailer length prefix
-        (trailer_len,) = struct.unpack(">I", data[pos : pos + 4])
-        assert pos + 4 + trailer_len == len(data)
-        trailer = data[pos + 4 :]
-        (count,) = struct.unpack(">I", trailer[:4])
-        assert count == entry["rows"]
-        assert n == entry["rows"]
-        total += n
-    assert total == kv.count()
-    with open(os.path.join(path, "_manifest.json")) as f:
-        assert json.load(f) == manifest
-    # binary readback validation (H7 dispatch on container type)
-    hfile.validate_layout(None, path)
+def test_streaming_bulkload_files_are_key_sorted(spark, sf_dir, tmp_path):
+    """Each micro-batch's adoption unit is sorted inside every file."""
+    from hbase_bulkload_service_spark.streaming import ops as st
+
+    write = st.streaming_bulkload(str(tmp_path), rollup=True, num_partitions=4)
+    write(tsdb.derive_tsdb_cells(load_events(spark, sf_dir)), 0)
+    assert _assert_files_key_sorted(str(tmp_path / "batch=0")) > 1
 
 
-def test_hfl2_unit_roundtrip(tmp_path):
-    """Pure-python HFL2 file: DIFF blocks + index + ROW bloom round-trip
-    exactly; bloom has no false negatives and few false positives."""
-    import hashlib
-
-    recs = []
-    for i in range(3000):
-        key = b"\x00\x01" + i.to_bytes(4, "big") + hashlib.md5(
-            str(i).encode()
-        ).digest()[:6]
-        recs.append((key, b"t", b"q%d" % (i % 7), hashlib.md5(key).digest()))
-    recs.sort(key=lambda r: r[0])
-    fn = str(tmp_path / "x.hfl2")
-    meta = hfile._write_hfl2_file(fn, recs)
-    assert meta["rows"] == 3000 and meta["encoding"] == "DIFF"
-    back, meta2 = hfile.read_hfl2_file(fn, verify_bloom=True)
-    assert back == recs
-    with open(fn, "rb") as f:
-        data = f.read()
-    _io, bloom_off, meta_off, n_blocks = struct.unpack_from(
-        ">QQQI", data, len(data) - 4 - 28
-    )
-    assert n_blocks >= 2  # actually blocked, not one giant block
-    bloom = data[bloom_off:meta_off]
-    fp = sum(
-        1
-        for i in range(1000)
-        if hfile.bloom_might_contain(bloom, b"absent-%d" % i)
-    )
-    assert fp < 50  # ~1% design rate, generous margin
-    # unsorted input must be rejected at write time
-    with pytest.raises(AssertionError, match="not sorted"):
-        hfile._write_hfl2_file(str(tmp_path / "bad.hfl2"), recs[::-1])
-
-
-def test_hfl2_distributed_write_read(spark, kv, tmp_path):
-    """H2/H3 over the binary container: write per-region HFL2 files,
-    parse them back distributed (bloom verified in-task), layout
-    validation dispatches on the container."""
-    path = str(tmp_path / "hfl2")
-    manifest = hfile.write_hfl2_files(kv, path, rollup=True, num_partitions=8)
-    assert manifest and all(m["file"].endswith(".hfl2") for m in manifest)
-    hfile.validate_layout(spark, path, rollup=True)
-    back = hfile.read_hfl2_dir(spark, path, verify_bloom=True)
-    assert back.count() == kv.count()
-    # per-region aggregates agree with the parquet writer's layout
-    a = {
-        r["region"]: (r["n"], r["lo"], r["hi"])
-        for r in back.groupBy("region")
-        .agg(
-            F.count("*").alias("n"),
-            F.min("key_hex").alias("lo"),
-            F.max("key_hex").alias("hi"),
-        )
-        .collect()
-    }
-    b = {}
-    for m in manifest:
-        n, lo, hi = b.get(m["region"], (0, "Z" * 99, ""))
-        b[m["region"]] = (
-            n + m["rows"],
-            min(lo, m["min_key_hex"]),
-            max(hi, m["max_key_hex"]),
-        )
-    assert a == b
-    # corrupting the first block's raw_len field must surface at readback
-    victim = os.path.join(path, manifest[0]["file"])
-    blob = bytearray(open(victim, "rb").read())
-    blob[10] ^= 0xFF  # byte 10 sits inside the first block header's raw_len
-    open(victim, "wb").write(bytes(blob))
-    with pytest.raises(AssertionError, match="length mismatch"):
-        hfile.read_hfl2_file(victim)
-
-
-def test_hfl2_wrong_region_mapping_is_caught(spark, kv, tmp_path):
+def test_v3_wrong_region_mapping_is_caught(spark, kv, tmp_path):
     """A regression that maps rows to wrong-but-monotone regions (e.g.
     region = bucket div 8 while claiming rollup=False) must fail the
     bucket-prefix check — manifest spans alone stay non-overlapping."""
-    path = str(tmp_path / "hfl2_badregion")
-    hfile.write_hfl2_files(kv, path, num_partitions=8)
+    from hbase_bulkload_service_spark.sources import hfilev3
+
+    path = str(tmp_path / "v3_badregion")
+    hfilev3.write_hfilev3_files(kv, path, num_partitions=8)
     mpath = os.path.join(path, "_manifest.json")
     manifest = json.load(open(mpath))
     assert any(m["region"] >= 8 for m in manifest)
+    hfile.validate_manifest_layout(path, rollup=False)  # clean before the edit
     for m in manifest:
         m["region"] = m["region"] // 8  # monotone but wrong under rollup=False
     json.dump(manifest, open(mpath, "w"))
     with pytest.raises(AssertionError, match="not in region"):
+        hfile.validate_manifest_layout(path, rollup=False)
+    with pytest.raises(AssertionError, match="not in region"):
         hfile.validate_layout(spark, path, rollup=False, deep=False)
-
-
-def test_hfl1_wrong_region_mapping_is_caught(spark, kv, tmp_path):
-    path = str(tmp_path / "hfl1_badregion")
-    hfile.write_hfl1_files(kv, path)
-    mpath = os.path.join(path, "_manifest.json")
-    manifest = json.load(open(mpath))
-    bad = max(manifest, key=lambda m: m["region"])
-    assert bad["region"] >= 8
-    for m in manifest:
-        m["region"] = m["region"] // 8
-    json.dump(manifest, open(mpath, "w"))
-    with pytest.raises(AssertionError, match="not in region|disagree"):
-        hfile.validate_layout(spark, path, rollup=False)

@@ -57,23 +57,48 @@ def test_revenue_query_broadcasts_small_dim(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_bulkload_kv_is_range_partitioned_and_sorted(spark):
+def test_kv_layout_is_range_partitioned_and_sorted(spark):
     from hbase_bulkload_service_spark.operators import tsdb
+    from hbase_bulkload_service_spark.sources import hfile
     from hbase_bulkload_service_spark.sources.tables import load_events
 
-    kv = tsdb.bulkload_kv(tsdb.derive_tsdb_cells(load_events(spark, SF_DIR)))
+    kv = hfile.kv_layout(
+        tsdb.bulkload_kv(tsdb.derive_tsdb_cells(load_events(spark, SF_DIR))),
+        rollup=True,
+    )
     plan = formatted_plan(kv)
-    # final layout: range exchange on the RAW BINARY (bucket, key,
-    # qualifier) — round 8: binary order == hex order, half the sort-key
-    # bytes (BINSORT_AB_r08.json) …
+    # exactly one range exchange, on the RAW BINARY (region, key,
+    # qualifier) — binary order == hex order, half the sort-key bytes
+    # (BINSORT_AB_r08.json) …
+    assert len(re.findall(r"rangepartitioning\(", plan)) == 1, plan
     assert re.search(
-        r"rangepartitioning\(bucket#\d+ ASC NULLS FIRST, key#\d+ ASC", plan
+        r"rangepartitioning\(region#\d+ ASC NULLS FIRST, key#\d+ ASC NULLS FIRST, "
+        r"qualifier#\d+ ASC NULLS FIRST", plan
     ), plan
-    # … with a partition-local sort on the same keys directly above it
+    # … with the partition-local sort on the same keys kept above it
     assert re.search(
-        r"\[bucket#\d+ ASC NULLS FIRST, key#\d+ ASC NULLS FIRST, "
+        r"\[region#\d+ ASC NULLS FIRST, key#\d+ ASC NULLS FIRST, "
         r"qualifier#\d+ ASC NULLS FIRST\], false", plan
     ), plan
+
+
+def test_q167_write_has_one_range_exchange(spark, monkeypatch):
+    """The v3 gate's write path shuffles its payload by key range once:
+    bulkload_kv leaves the layout to the writer."""
+    from hbase_bulkload_service_spark.sources import hfilev3
+
+    written = []
+    rolling_write = hfilev3._rolling_write_arrow
+
+    def capture(sorted_kv, write_region_file):
+        written.append(sorted_kv)
+        return rolling_write(sorted_kv, write_region_file)
+
+    monkeypatch.setattr(hfilev3, "_rolling_write_arrow", capture)
+    registry.QUERIES["q167_hfilev3_container"](spark, SF_DIR).collect()
+    (sorted_kv,) = written
+    plan = formatted_plan(sorted_kv)
+    assert len(re.findall(r"rangepartitioning\(", plan)) == 1, plan
 
 
 def test_topk_avoids_global_sort(spark):

@@ -1,5 +1,4 @@
-"""Wave-8 operators: sketch accuracy verdicts, exact heavy hitters.
-(The HFL2 container is covered in test_bulkload_hfile.py.)"""
+"""Wave-8 operators: sketch accuracy verdicts, exact heavy hitters."""
 
 from __future__ import annotations
 
